@@ -245,3 +245,37 @@ def test_module_level_serve_dashboard_requires_active_run():
     state.set_active_run(None)
     with pytest.raises(RuntimeError, match="No active run"):
         w.serve_dashboard()
+
+
+def test_tracker_write_path_starts_no_spark_session(tmp_path, monkeypatch):
+    """init → log → log_artifact → finish write through the driver-local
+    Arrow writer, so a script that never asks for a session gets none."""
+    monkeypatch.chdir(tmp_path)
+    run = w.init(project="nospark", config={"lr": 0.1}, system_metrics=False, spark=None)
+    w.log({"loss": 0.5})
+    w.log_artifact("note")
+    w.finish()
+    store = run._store
+    assert store._spark is None
+    assert store._duck_row("runs", "id", run.id)["status"] == "completed"
+
+
+def test_finish_runs_no_spark_job(spark, tmp_path, monkeypatch):
+    monkeypatch.chdir(tmp_path)
+    run = w.init(project="nojob", system_metrics=False, spark=spark)
+    w.log({"loss": 0.5})
+    sc = spark.sparkContext
+    sc.setJobGroup("finish-probe", "finish")
+    try:
+        w.finish()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("finish-probe")) == []
+
+    store = run._store
+    duck = store._duck_row("runs", "id", run.id)
+    view = store.df("runs").filter(f"id = '{run.id}'").head()
+    assert duck["status"] == view.status == "completed"
+    assert duck["ended_at"] is not None
+    assert view.ended_at == duck["ended_at"]

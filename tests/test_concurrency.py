@@ -73,3 +73,37 @@ def test_two_stores_two_runs(spark, tmp_path):
     assert s2.duck.execute("SELECT value FROM metrics").fetchone()[0] == 2.0
     s1.close()
     s2.close()
+
+
+def test_concurrent_upserts_of_one_key_converge(spark, tmp_path):
+    """8 threads x 25 rounds; in each round every thread upserts the same
+    (run_id, key) at once.  DuckDB's ON CONFLICT winner and the Parquet
+    view's highest-_seq row must be the same write for every key."""
+    import sys
+
+    store = WaddleStore(str(tmp_path / "s"), spark=spark)
+    n_threads, rounds = 8, 25
+    start = threading.Barrier(n_threads, timeout=60)
+
+    def worker(tid: int):
+        for i in range(rounds):
+            start.wait()
+            store.upsert("params", [{"run_id": "r", "key": f"k{i}", "value": f'"{tid}"'}])
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=worker, args=(t,)) for t in range(n_threads)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+
+    duck = dict(store.duck.execute("SELECT key, value FROM params").fetchall())
+    view = {r.key: r.value for r in store.df("params").collect()}
+    assert len(duck) == rounds
+    assert view == duck
+    store.close()

@@ -126,8 +126,7 @@ def test_run_serve_dashboard(spark, tmp_path, monkeypatch):
 
 
 def test_write_batches_fill_ingest_observations(spark, tmp_path, monkeypatch):
-    """df.observe() on the write path: every micro-batch records its row
-    count from JVM-side accumulators (no second pass over the data)."""
+    """Every write batch records its row count in ingest_stats."""
     import waddleml_spark as w
 
     monkeypatch.chdir(tmp_path)

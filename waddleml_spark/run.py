@@ -33,10 +33,11 @@ from typing import Any
 from waddleml_spark import state
 from waddleml_spark.store import WaddleStore
 
-# Micro-batch sizing: each flush is a Spark job (~0.3-1 s locally), so the
-# row threshold dominates sustained-throughput logging while the time
-# threshold bounds live-update latency (the reference UI debounces at
-# 500 ms and the sampler ticks at 5 s — 2 s latency is inside the contract).
+# Micro-batch sizing: each flush writes one Parquet part file and one DuckDB
+# INSERT, so the row threshold bounds the file count under sustained logging
+# while the time threshold bounds live-update latency (the reference UI
+# debounces at 500 ms and the sampler ticks at 5 s — 2 s latency is inside
+# the contract).
 FLUSH_ROWS = 5000
 FLUSH_SECONDS = 2.0
 

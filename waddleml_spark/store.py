@@ -6,9 +6,10 @@ Reference storage is one DuckDB file with row-at-a-time autocommit INSERTs
 (waddle/_db.py:27-68, waddle/_run.py:122-125).  Spark translation
 (SURVEY.md §1.3, §4.3):
 
-- every write lands as a micro-batch: rows → Spark DataFrame →
-  (a) Parquet append into the table's directory,
-  (b) Arrow handoff → DuckDB INSERT (the "DataFrame writes to DuckDB" path);
+- every write lands as a micro-batch: rows → ONE driver-local Arrow table →
+  (a) a Parquet part file published into the table's directory,
+  (b) the same Arrow table handed to DuckDB (INSERT / ON CONFLICT), so the
+  tracker's write path runs no Spark job and never needs a SparkSession;
 - mutable semantics (upsert D3, update D5, delete D6) on immutable Parquet
   use an event-log discipline: versioned tables carry a monotonic `_seq`;
   the read view is last-writer-wins per primary key (window dedupe).
@@ -26,10 +27,12 @@ stay cheap.
 
 from __future__ import annotations
 
+import contextlib
 import itertools
 import os
 import threading
 import time
+import uuid
 
 import duckdb
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -61,6 +64,11 @@ def _parallelism(spark: SparkSession) -> int:
         return 8
 
 
+def _discard(path: str) -> None:
+    with contextlib.suppress(FileNotFoundError):
+        os.unlink(path)
+
+
 def _next_seq() -> int:
     """Monotonic write sequence: epoch-micros * 1000 + counter mod 1000.
     Orders writes across restarts (wall clock) and within a process
@@ -81,9 +89,11 @@ class WaddleStore:
         self._spark = spark
         self.duck_path = os.path.join(self.root, "waddle.duckdb")
         self.duck = duckdb.connect(self.duck_path)
-        self._duck_lock = threading.Lock()  # single-writer (ref S5)
-        # last observed write-batch metrics per table ({"rows": n}) —
-        # filled by _write_batch via df.observe()
+        # single-writer (ref S5); re-entrant because update_run and the
+        # versioned-table path of _write_batch hold it around locked calls
+        self._duck_lock = threading.RLock()
+        # row count of the last write batch per table ({"rows": n}),
+        # set by _write_batch from the batch it wrote
         self.ingest_stats: dict[str, dict] = {}
         for stmt in schemas.DUCKDB_DDL.split(";"):
             if stmt.strip():
@@ -129,23 +139,47 @@ class WaddleStore:
         "binary": "binary",
     }
 
-    def _arrow_schema(self, table: str, versioned: bool):
+    @classmethod
+    def _arrow_schema(cls, struct: T.StructType):
+        """Arrow twin of a Spark schema.  Every field stays nullable: NOT
+        NULL is DuckDB's to enforce, and a rejected batch is never
+        published."""
         import pyarrow as pa
 
-        fields = [
-            pa.field(f.name, getattr(pa, self._ARROW_TYPES[f.dataType.simpleString()])())
-            for f in schemas.WADDLE_TABLES[table].fields
-        ]
-        if versioned:
-            fields.append(pa.field("_seq", pa.int64()))
-        return pa.schema(fields)
+        return pa.schema(
+            [
+                pa.field(f.name, getattr(pa, cls._ARROW_TYPES[f.dataType.simpleString()])())
+                for f in struct.fields
+            ]
+        )
+
+    def _stage(self, table: str, arrow_tbl) -> tuple[str, str]:
+        """Write one part file of `table` under a hidden temp name and
+        return (temp path, final path); the caller publishes it with
+        os.replace.  Spark's file listing and the streaming tail skip
+        dot-prefixed names, so no reader ever sees a half-written part
+        file, and a failed write leaves nothing behind."""
+        import pyarrow.parquet as pq
+
+        d = self._dir(table)
+        os.makedirs(d, exist_ok=True)  # Spark's writer created dirs; pyarrow doesn't
+        name = f"part-{uuid.uuid4().hex}.snappy.parquet"
+        tmp = os.path.join(d, "." + name)
+        try:
+            pq.write_table(arrow_tbl, tmp, compression="snappy")
+        except BaseException:
+            _discard(tmp)
+            raise
+        return tmp, os.path.join(d, name)
 
     def _write_batch(self, table: str, rows: list[dict], duck_sql: str | None) -> None:
-        """One micro-batch: rows → ONE Arrow table → parquet file append +
-        DuckDB SQL, all driver-local.
+        """One micro-batch: rows → ONE Arrow table → parquet part file +
+        DuckDB SQL, all driver-local.  Every row batch the store writes
+        goes through here; delete tombstones, which have no DuckDB mirror,
+        use `_stage` alone.
 
         No Spark job on the write path: a 5 k-row batch is driver-scale
-        data, and the createDataFrame → coalesce(1).write job costs
+        data, and a one-partition Spark DataFrame write job costs
         ~150 ms of scheduling for ~10 ms of IO (measured: the swap took
         the hot logging path from ~18 k to >40 k rows/s).  The Arrow
         schema mirrors schemas.WADDLE_TABLES exactly, so Spark's
@@ -153,31 +187,55 @@ class WaddleStore:
         declares the same schema) see files identical to what a Spark
         write would produce.  Spark remains the ANALYTICS engine; using
         it as a row-batch writer was overhead, not parallelism.
+
+        Commit order: the part file is staged under a hidden name, the
+        DuckDB statement runs inside BEGIN, the file is os.replace'd into
+        place, then COMMIT.  If DuckDB rejects the batch (or COMMIT
+        fails) the transaction rolls back and the file is removed, so
+        neither layer keeps it.  A crash between the replace and the
+        COMMIT leaves the part file published while DuckDB, on reopen,
+        has discarded the open transaction: Parquet is then ahead of the
+        mirror by that one batch (replace and COMMIT run under one lock,
+        so at most one batch is in that window).
+
+        Versioned tables draw `_seq` under the same lock as their DuckDB
+        statement, so concurrent writers of one key apply in `_seq` order
+        in both layers and both keep the same last writer.  Metrics and
+        artifact appends stage their file outside the lock.
         """
         if not rows:
             return
-        versioned = table in _VERSIONED
-        seq = _next_seq() if versioned else None
-        cols = [f.name for f in schemas.WADDLE_TABLES[table].fields]
-        import uuid
-
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
+        versioned = table in _VERSIONED
+        cols = [f.name for f in schemas.WADDLE_TABLES[table].fields]
         data = {c: [r.get(c) for r in rows] for c in cols}
-        if versioned:
-            data["_seq"] = [seq] * len(rows)
-        arrow_full = pa.table(data, schema=self._arrow_schema(table, versioned))
-        d = self._dir(table)
-        os.makedirs(d, exist_ok=True)  # Spark's writer created dirs; pyarrow doesn't
-        path = os.path.join(d, f"part-{uuid.uuid4().hex}.snappy.parquet")
-        pq.write_table(arrow_full, path, compression="snappy")
+        with self._duck_lock if versioned else contextlib.nullcontext():
+            if versioned:
+                data["_seq"] = [_next_seq()] * len(rows)
+            schema = self._arrow_schema(self._spark_schema(table, versioned))
+            arrow_full = pa.table(data, schema=schema)
+            tmp, final = self._stage(table, arrow_full)
+            arrow_tbl = arrow_full.drop_columns(["_seq"]) if versioned else arrow_full
+            with self._duck_lock:
+                published = False
+                try:
+                    self.duck.execute("BEGIN")
+                    self.duck.register("_batch", arrow_tbl)
+                    try:
+                        self.duck.execute(duck_sql or f"INSERT INTO {table} SELECT * FROM _batch")
+                    finally:
+                        self.duck.unregister("_batch")
+                    os.replace(tmp, final)
+                    published = True
+                    self.duck.execute("COMMIT")
+                except BaseException:
+                    # a failed COMMIT has already ended the transaction
+                    with contextlib.suppress(duckdb.TransactionException):
+                        self.duck.execute("ROLLBACK")
+                    _discard(final if published else tmp)
+                    raise
         self.ingest_stats[table] = {"rows": len(rows)}
-        arrow_tbl = arrow_full.drop_columns(["_seq"]) if versioned else arrow_full
-        with self._duck_lock:
-            self.duck.register("_batch", arrow_tbl)
-            self.duck.execute(duck_sql or f"INSERT INTO {table} SELECT * FROM _batch")
-            self.duck.unregister("_batch")
         # the parquet dir just gained a file: drop fan_out's stale
         # partition-count memo so same-shape re-reads re-probe
         from waddleml_spark.session import reset_fan_out_memo
@@ -210,24 +268,18 @@ class WaddleStore:
         )
 
     def update_run(self, run_id: str, **fields) -> None:
-        """D5: UPDATE runs SET ... WHERE id (ref waddle/_run.py:198-201).
-        Parquet side: append a full new row version (last-writer-wins)."""
-        current = self._duck_row("runs", "id", run_id)
-        if current is None:
-            raise KeyError(f"run {run_id} not found")
-        current.update(fields)
-        sets = ", ".join(f"{k} = ?" for k in fields)
+        """D5: UPDATE runs SET ... WHERE id (ref waddle/_run.py:198-201),
+        written as an upsert of the full merged row: DuckDB's ON CONFLICT
+        (id) DO UPDATE of every non-key column reaches the same state as
+        the UPDATE, and the Parquet side gains a new row version
+        (last-writer-wins).  The lock spans read, merge and write, so
+        concurrent updates of one run cannot drop each other's fields."""
         with self._duck_lock:
-            self.duck.execute(
-                f"UPDATE runs SET {sets} WHERE id = ?",
-                [*fields.values(), run_id],
-            )
-        # parquet version row (skip duck insert — already updated)
-        versioned_schema = self._spark_schema("runs", True)
-        cols = [f.name for f in schemas.WADDLE_TABLES["runs"].fields]
-        row = tuple([current.get(c) for c in cols] + [_next_seq()])
-        df = self.spark.createDataFrame([row], versioned_schema)
-        df.coalesce(1).write.mode("append").parquet(self._dir("runs"))
+            current = self._duck_row("runs", "id", run_id)
+            if current is None:
+                raise KeyError(f"run {run_id} not found")
+            current.update(fields)
+            self.upsert("runs", [current])
 
     def delete_run(self, run_id: str) -> None:
         """D6: cascading delete in FK order (ref _dashboard_api.py:237-249).
@@ -272,16 +324,15 @@ class WaddleStore:
     )
 
     def _append_tombstones(self, run_id: str) -> None:
-        seq = _next_seq()
-        rows = [
-            ("metrics", run_id, seq),
-            ("artifacts", run_id, seq),
-            ("tags", run_id, seq),
-            ("params", run_id, seq),
-            ("runs", run_id, seq),
-        ]
-        df = self.spark.createDataFrame(rows, self._CDC_SCHEMA)
-        df.coalesce(1).write.mode("append").parquet(self._dir("_cdc_deletes"))
+        import pyarrow as pa
+
+        tables = ["metrics", "artifacts", "tags", "params", "runs"]
+        n = len(tables)
+        tombs = pa.table(
+            {"table": tables, "run_id": [run_id] * n, "_seq": [_next_seq()] * n},
+            schema=self._arrow_schema(self._CDC_SCHEMA),
+        )
+        os.replace(*self._stage("_cdc_deletes", tombs))
 
     def changes(self, table: str, since_seq: int = 0) -> DataFrame:
         """Change-data feed for a versioned table: every version row with
