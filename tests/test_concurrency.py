@@ -107,3 +107,97 @@ def test_concurrent_upserts_of_one_key_converge(spark, tmp_path):
     assert len(duck) == rounds
     assert view == duck
     store.close()
+
+
+def test_readers_poll_while_writer_logs(tmp_path, monkeypatch):
+    """One thread logs 20 k rows through Run.log in 500-row flushes while
+    six reader threads (more than the host's cores, with a shortened
+    switch interval) poll GET /api/runs/{id}/metrics and GET
+    /api/runs/{id}.  The routes share the dashboard's DuckDB cursor while
+    the writer runs BEGIN ... COMMIT per batch: every poll must answer 200
+    with a flushed prefix (whole steps 0..F-1 of every key, since one
+    log() call buffers all of a step's keys), ordered by (key, step),
+    with the logged values, and no reader may see the prefix shrink."""
+    import json
+    import sys
+    import urllib.request
+
+    from waddleml_spark import run as run_mod
+    from waddleml_spark.server import serve_in_thread
+
+    monkeypatch.setattr(run_mod, "FLUSH_ROWS", 499)
+    monkeypatch.chdir(tmp_path)
+    run = w.init(project="rw", system_metrics=False, spark=None)
+    keys, steps, n_readers = ["a", "b", "c", "d"], 5000, 6
+
+    def value(j: int, s: int) -> float:
+        return s * 10.0 + j + 0.25
+
+    server = serve_in_thread(run._store, port=0)
+    base = "http://%s:%d" % server.server_address
+    first_polls = threading.Barrier(n_readers + 1, timeout=60)
+    done = threading.Event()
+
+    def writer():
+        try:
+            first_polls.wait()  # every reader has seen the empty run
+            for s in range(steps):
+                run.log({k: value(j, s) for j, k in enumerate(keys)})
+            run.flush()
+        finally:
+            done.set()
+
+    def get(path):
+        with urllib.request.urlopen(base + path, timeout=60) as r:
+            return r.status, json.loads(r.read())
+
+    def poll() -> int:
+        status, rows = get(f"/api/runs/{run.id}/metrics?limit=100000")
+        assert status == 200
+        n = len(rows) // len(keys)
+        assert [(r["key"], r["step"]) for r in rows] == [(k, s) for k in keys for s in range(n)]
+        assert [r["value"] for r in rows] == [
+            value(j, s) for j in range(len(keys)) for s in range(n)
+        ]
+        status, detail = get(f"/api/runs/{run.id}")
+        assert status == 200 and detail["run"]["id"] == run.id
+        assert detail["metric_keys"] in ([], keys)
+        return n
+
+    prefixes: dict[int, list[int]] = {}
+    errors: list[BaseException] = []
+
+    def reader(i: int):
+        seen = prefixes.setdefault(i, [])
+        try:
+            seen.append(poll())
+            first_polls.wait()
+            while True:
+                finished = done.is_set()
+                seen.append(poll())
+                if finished:
+                    break
+        except BaseException as e:  # reported by the main thread
+            errors.append(e)
+            first_polls.abort()
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-4)
+    threads = [threading.Thread(target=writer)]
+    threads += [threading.Thread(target=reader, args=(i,)) for i in range(n_readers)]
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=180)
+    finally:
+        sys.setswitchinterval(old)
+        server.shutdown()
+        server.server_close()
+    assert not any(t.is_alive() for t in threads)
+    run.finish()
+    assert not errors, errors[0]
+    assert len(prefixes) == n_readers
+    for seen in prefixes.values():
+        assert seen[0] == 0 and seen[-1] == steps
+        assert seen == sorted(seen)  # reads never go back in time

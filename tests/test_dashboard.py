@@ -1,10 +1,12 @@
 """SparkDashboard behavioral tests: seed a store through the public API,
 then assert every dashboard query shape (ref: waddle/_dashboard_api.py) —
-including a differential check against the DuckDB mirror for list_runs.
+including a differential check of every read route (DuckDB SQL on the
+mirror) against the Spark views of the Parquet event log.
 """
 
 from __future__ import annotations
 
+import json
 import time
 
 import pytest
@@ -143,18 +145,125 @@ def test_metric_keys_global_excludes_system(seeded):
     assert keys == ["acc", "loss"]
 
 
-def test_list_runs_matches_duckdb_mirror(seeded):
-    """Differential: Spark list (without staleness rewrite) vs the mirror."""
+def test_read_routes_match_spark_views(seeded):
+    """Every read route against the same shape computed from the Spark
+    last-writer-wins views (store.df) of the Parquet log, after an
+    update_run and a params re-upsert, so it also shows that the mirror
+    and the log agree.  Rows, keys, order and min/max match exactly;
+    downsampled means may differ by 1e-12 relative, because the two
+    engines sum in different orders."""
+    from pyspark.sql import functions as F
+
+    from waddleml_spark.operators.core import last_per_group
+    from waddleml_spark.operators.dashboard import series_downsample
+
     store, runs = seeded
+    rid2 = runs[2].id
+    store.update_run(rid2, notes="re-noted")
+    store.upsert("params", [{"run_id": rid2, "key": "layers", "value": "7"}])
     dash = SparkDashboard(store)
-    got = {
-        (r["id"], r["project"], r["name"])
-        for r in dash.list_runs(now=0)  # now=0 disables staleness rewrite
-    }
-    want = set(
-        store.duck.execute("SELECT id, project, name FROM runs").fetchall()
+    assert dash.get_run(rid2)["run"]["notes"] == "re-noted"
+    assert dash.get_run(rid2)["params"]["layers"] == 7
+
+    def rows(df):
+        return [r.asDict() for r in df.collect()]
+
+    def by_run(df, rid, col="run_id"):
+        return df.filter(F.col(col) == rid)
+
+    run_v, params_v, tags_v, art_v, met_v = (
+        store.df(t) for t in ("runs", "params", "tags", "artifacts", "metrics")
     )
-    assert got == want
+    cols = ["id", "project", "name", "status", "started_at", "ended_at", "commit_sha"]
+    ids = [r.id for r in run_v.collect()]
+    assert sorted(ids) == sorted(r.id for r in runs)
+
+    # list_runs: every sort column both ways (NULLS LAST, then id), a
+    # filtered page, and the stale reclassification
+    for sort in ("started_at", "ended_at", "name", "status", "project"):
+        for order in ("asc", "desc"):
+            c = F.col(sort)
+            key = c.desc_nulls_last() if order == "desc" else c.asc_nulls_last()
+            want = rows(run_v.select(*cols).orderBy(key, "id").offset(1).limit(2))
+            got = dash.list_runs(sort=sort, order=order, limit=2, offset=1, now=0)
+            assert got == want, (sort, order)
+    want = rows(
+        run_v.filter((F.col("project") == "alpha") & (F.col("status") == "running"))
+        .select(*cols)
+        .orderBy(F.col("started_at").desc(), "id")
+    )
+    assert dash.list_runs(project="alpha", status="running", now=0) == want
+    now = time.time()
+    last_ts = {r.run_id: r.ts for r in met_v.groupBy("run_id").agg(F.max("ts").alias("ts")).collect()}
+    want = rows(run_v.select(*cols).orderBy(F.col("started_at").desc(), "id"))
+    for d in want:
+        if d["status"] == "running" and now - last_ts.get(d["id"], d["started_at"]) > 300:
+            d["status"] = "aborted"
+    assert dash.list_runs(now=now) == want
+    assert "aborted" in {d["status"] for d in want}
+
+    art_cols = ["id", "name", "kind", "created_at", "uri", "sha256", "size_bytes"]
+    for run in rows(run_v):
+        rid = run["id"]
+        want_run = dict(run, env=json.loads(run["env"]), config=json.loads(run["config"]))
+        got = dash.get_run(rid)
+        assert got["run"] == want_run
+        for table, kv in (("params", params_v), ("tags", tags_v)):
+            want_kv = [(r.key, json.loads(r.value)) for r in by_run(kv, rid).orderBy("key").collect()]
+            assert list(got[table].items()) == want_kv
+        assert got["artifacts"] == rows(
+            by_run(art_v, rid).select(*art_cols).orderBy("created_at", "id")
+        )
+        assert got["metric_keys"] == [
+            r.key for r in by_run(met_v, rid).select("key").distinct().orderBy("key").collect()
+        ]
+
+        series = by_run(met_v, rid).select("key", "step", "ts", "value")
+        assert dash.get_metrics(rid) == rows(series.orderBy("key", "step"))
+        assert dash.get_metrics(rid, limit=7) == rows(series.orderBy("key", "step").limit(7))
+        assert dash.get_metrics(rid, key="loss", limit=3) == rows(
+            series.filter(F.col("key") == "loss").orderBy("step").limit(3)
+        )
+
+        m = by_run(met_v, rid).filter(F.col("key") == "loss")
+        want_ds = series_downsample(
+            m.withColumn("__x", F.col("step").cast("double")), ["run_id"], "__x", "value", 3
+        ).orderBy("bucket").collect()
+        got_ds = dash.get_metrics_downsampled(rid, "loss", points=3)
+        assert [(g["bucket"], g["n"], g["value_min"], g["value_max"]) for g in got_ds] == [
+            (w_.bucket, w_.n_points, w_.y_min, w_.y_max) for w_ in want_ds
+        ]
+        for g, w_ in zip(got_ds, want_ds):
+            assert g["step"] == pytest.approx(w_.x, rel=1e-12, abs=0)
+            assert g["value"] == pytest.approx(w_.y_mean, rel=1e-12, abs=0)
+
+    cmp = dash.compare_runs(ids)
+    assert cmp["runs"] == rows(run_v.select(*cols).orderBy(F.col("started_at").desc(), "id"))
+    want_params: dict = {}
+    for r in params_v.orderBy("key", "run_id").collect():
+        want_params.setdefault(r.run_id, {})[r.key] = json.loads(r.value)
+    assert cmp["params"] == want_params
+    want_series: dict = {}
+    for r in met_v.orderBy("key", "step", "run_id").collect():
+        want_series.setdefault(r.key, []).append(
+            {"run_id": r.run_id, "step": r.step, "value": r.value}
+        )
+    assert cmp["metrics"] == want_series
+
+    assert dash.metric_keys_global() == [
+        r.key
+        for r in met_v.filter(~F.col("key").startswith("system/"))
+        .select("key").distinct().orderBy("key").collect()
+    ]
+    names = run_v.select(F.col("id").alias("run_id"), "name", "started_at")
+    for key in ("loss", "acc"):
+        last = last_per_group(met_v.filter(F.col("key") == key), ["run_id"], "step")
+        want = rows(
+            last.join(names, on="run_id")
+            .orderBy(F.col("started_at").desc(), "run_id", "value")
+            .select("run_id", "name", "value")
+        )
+        assert dash.metric_summary(key) == want
 
 
 def test_series_downsample_bounds_and_coverage(spark):

@@ -179,3 +179,88 @@ def test_http_static_route_and_traversal_guard(served):
     except urllib.error.HTTPError as e:
         hit = e.code
     assert hit == 404  # traversal blocked
+
+
+def _status(url, data=None, method="GET"):
+    """(status, JSON body) of one call, error statuses included."""
+    req = urllib.request.Request(url, data=data, method=method)
+    try:
+        with urllib.request.urlopen(req, timeout=30) as r:
+            return r.status, json.loads(r.read())
+    except urllib.error.HTTPError as e:
+        return e.code, json.loads(e.read())
+
+
+def test_http_malformed_numeric_param_is_400(served):
+    base, run = served
+    for path in (
+        "/api/runs?limit=abc",
+        "/api/runs?offset=-1",
+        f"/api/runs/{run.id}/metrics?limit=x",
+        f"/api/runs/{run.id}/metrics/downsampled?key=loss&points=0",
+        "/api/metric-summary?key=loss&limit=1.5",
+    ):
+        status, body = _status(base + path)
+        assert status == 400, path
+        assert "must be an integer" in body["error"]
+    # the server is still answering
+    assert _status(f"{base}/api/runs?limit=1")[0] == 200
+
+
+def test_http_invalid_compare_body_is_400(served):
+    base, _ = served
+    for data in (b"{not json", b"[1, 2]", b'{"run_ids": "abc"}', b'{"run_ids": [1]}'):
+        status, body = _status(f"{base}/api/compare", data=data, method="POST")
+        assert status == 400, data
+        assert "error" in body
+
+
+def test_http_route_exception_is_500(served, monkeypatch):
+    from waddleml_spark.operators.dashboard import SparkDashboard
+
+    base, _ = served
+
+    def boom(self):
+        raise RuntimeError("mirror unavailable")
+
+    monkeypatch.setattr(SparkDashboard, "metric_keys_global", boom)
+    status, body = _status(f"{base}/api/metric-keys")
+    assert status == 500
+    assert body == {"error": "RuntimeError: mirror unavailable"}
+
+
+def test_read_routes_start_no_spark_session(tmp_path, monkeypatch):
+    """Every GET route that reads the store, and POST /api/compare, are
+    answered from the DuckDB mirror: a store opened without a session
+    never starts one."""
+    monkeypatch.chdir(tmp_path)
+    state.set_active_run(None)
+    run = w.init(project="nojvm", config={"lr": 0.1}, tags={"t": 1}, system_metrics=False, spark=None)
+    for s in range(3):
+        run.log({"loss": 1.0 / (s + 1)})
+    run.log_artifact("note")
+    run.finish()
+    store = run._store
+    server = serve_in_thread(store, port=0)
+    base = "http://%s:%d" % server.server_address
+    try:
+        for path in (
+            "/api/runs",
+            f"/api/runs/{run.id}",
+            f"/api/runs/{run.id}/metrics",
+            f"/api/runs/{run.id}/metrics/downsampled?key=loss",
+            "/api/metric-keys",
+            "/api/metric-summary?key=loss",
+        ):
+            assert _status(base + path)[0] == 200, path
+        status, cmp = _status(
+            f"{base}/api/compare", data=json.dumps({"run_ids": [run.id]}).encode(), method="POST"
+        )
+        assert status == 200 and len(cmp["metrics"]["loss"]) == 3
+        with urllib.request.urlopen(f"{base}/", timeout=30) as r:
+            assert r.status == 200
+    finally:
+        server.shutdown()
+        server.server_close()
+        state.set_active_run(None)
+    assert store._spark is None

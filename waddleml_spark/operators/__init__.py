@@ -6,7 +6,6 @@ pushdown, column pruning, broadcast selection and whole-stage codegen apply.
 """
 
 from waddleml_spark.operators.core import (  # noqa: F401
-    allowlist_sort,
     equality_filter,
     last_per_group,
     paginate,

@@ -1,34 +1,41 @@
-"""SparkDashboard: the reference DashboardAPI's full query repertoire
-(ref: waddle/_dashboard_api.py:22-249) as composed Catalyst plans over a
-WaddleStore, returning the same wire-shape dicts so the reference's
-dashboard/HTTP layer runs unchanged on top.
+"""SparkDashboard: the reference DashboardAPI's read routes
+(ref: waddle/_dashboard_api.py:22-249) as parameterised SQL on the store's
+DuckDB mirror, in the reference's wire shapes.
 
-Key plan upgrades over the reference (SURVEY.md §3.2/§3.3):
-- list_runs: the per-row correlated MAX(ts) re-query (an N+1 loop,
-  ref :56-69) folds into ONE aggregate + broadcast left join + CASE;
-- compare_runs: the per-metric-key series loop (another N+1, ref :190-198)
-  collapses into one scan ordered by (key, step), grouped driver-side;
-- metric_summary: the correlated scalar subquery (ref :227) becomes a
-  window rank (ties kept — rank(), exact parity with equality-on-MAX).
+Each route is a small interactive lookup, and the store keeps the mirror
+in the same logical state as its Parquet event log, so a route costs
+milliseconds and starts no JVM (as Spark plans over the event log the same
+routes took 0.2-1 s warm and 4-12 s cold: tools/serve_bench.py).  The
+Spark versions of these shapes are catalog queries (`runs_list_page`,
+`flagship_leaderboard`, `metric_summary_stats`, `series_downsample_50`,
+...), checked against the DuckDB oracle: the scale path.  Only
+`delete_run` reaches Spark, through the store's Parquet rewrite.
 
-Scale: every shape partitions on run_id (or key) — with metrics bucketed
-by run_id these are shuffle-free; limits ride TakeOrderedAndProject.
+The reference's N+1 loops stay folded (SURVEY.md §3.2/§3.3): list_runs
+reclassifies a page's stale runs from one aggregate, compare_runs reads
+every series in one scan.  `series_downsample` and `lttb_downsample` are
+the DataFrame operators the catalog builds its chart queries from.
 """
 
 from __future__ import annotations
 
 import json
+import threading
 import time
 from collections.abc import Sequence
 from typing import Any
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from waddleml_spark.operators import core as ops
 from waddleml_spark.store import WaddleStore
 
-_RUN_COLS = ["id", "project", "name", "status", "started_at", "ended_at", "commit_sha"]
+_RUN_COLS = "id, project, name, status, started_at, ended_at, commit_sha"
+# list_runs sort columns, the first being the fallback (ref O1).  With the
+# asc/desc check, this allowlist keeps the caller's strings out of the SQL.
+_SORTABLE = ("started_at", "ended_at", "name", "status", "project")
+_IN_IDS = "(SELECT unnest(?))"  # IN-list bound as one list parameter
+_STALE_AFTER_S = 300
 
 
 def _loads_tolerant(v):
@@ -42,8 +49,24 @@ def _loads_tolerant(v):
 
 
 class SparkDashboard:
+    """Read routes over `store`'s DuckDB mirror.
+
+    All reads share one cursor, serialised by a lock: DuckDB keeps every
+    cursor registered with its parent connection until that closes, so a
+    cursor per request would grow a long-running server's memory.  The
+    cursor is its own connection, so each statement sees the writer's
+    last COMMIT and never a batch in flight."""
+
     def __init__(self, store: WaddleStore):
         self.store = store
+        self._cur = store.duck.cursor()
+        self._lock = threading.Lock()
+
+    def _rows(self, sql: str, params: Sequence = ()) -> list[dict[str, Any]]:
+        with self._lock:
+            cur = self._cur.execute(sql, list(params))
+            cols = [d[0] for d in cur.description]
+            return [dict(zip(cols, r)) for r in cur.fetchall()]
 
     # --- list_runs (P1 P2 P9 O1 O2) --------------------------------------
 
@@ -57,182 +80,144 @@ class SparkDashboard:
         offset: int = 0,
         now: float | None = None,
     ) -> list[dict[str, Any]]:
-        runs = self.store.df("runs").select(*_RUN_COLS)
-        runs = ops.equality_filter(runs, {"project": project, "status": status})
-        runs = ops.allowlist_sort(runs, sort, order, tiebreak="id")
-        runs = ops.paginate(runs, limit=limit, offset=offset)
-        page = [r.asDict() for r in runs.collect()]
-        # reference order (ref :45-69): sort/LIMIT on the STORED status,
-        # THEN reclassify stale runs on the fetched page only —
-        # reclassifying before the sort changed PAGE MEMBERSHIP under
-        # sort='status' (round-6 review find).  Unlike the reference's
-        # per-row N+1 re-query, the page's last-metric timestamps come
-        # from ONE bounded IN-list aggregate (page size ≤ limit).
-        now_ts = now if now is not None else time.time()
+        """One page of runs ordered by `sort` (NULLS LAST both ways), then
+        id, so pages are deterministic.  The page is cut on the STORED
+        status; then a running run with no metric for 300 s (or none
+        since it started) shows as aborted, unwritten."""
+        col = sort if sort in _SORTABLE else _SORTABLE[0]
+        direction = "DESC" if order.lower() == "desc" else "ASC"
+        filters = [(c, v) for c, v in (("project", project), ("status", status)) if v is not None]
+        where = " WHERE " + " AND ".join(f"{c} = ?" for c, _ in filters) if filters else ""
+        page = self._rows(
+            f"SELECT {_RUN_COLS} FROM runs{where}"
+            f" ORDER BY {col} {direction} NULLS LAST, id LIMIT ? OFFSET ?",
+            [*(v for _, v in filters), limit, offset],
+        )
         running = [d["id"] for d in page if d["status"] == "running"]
         if running:
-            last = {
-                r.run_id: r.last_ts
-                for r in self.store.df("metrics")
-                .filter(F.col("run_id").isin(running))
-                .groupBy("run_id")
-                .agg(F.max("ts").alias("last_ts"))
-                .collect()
-            }
+            sql = f"SELECT run_id, max(ts) AS ts FROM metrics WHERE run_id IN {_IN_IDS} GROUP BY 1"
+            last = {r["run_id"]: r["ts"] for r in self._rows(sql, [running])}
+            now_ts = time.time() if now is None else now
             for d in page:
-                if d["status"] != "running":
-                    continue
-                last_ts = last.get(d["id"])
-                if last_ts is not None and (now_ts - last_ts) > 300:
-                    d["status"] = "aborted"
-                elif (
-                    last_ts is None
-                    and d["started_at"]
-                    and (now_ts - d["started_at"]) > 300
-                ):
+                seen = last.get(d["id"], d["started_at"])
+                if d["status"] == "running" and now_ts - seen > _STALE_AFTER_S:
                     d["status"] = "aborted"
         return page
 
     # --- get_run (P3 P4 A3) ----------------------------------------------
 
     def get_run(self, run_id: str) -> dict[str, Any]:
-        runs = self.store.df("runs")
-        row = runs.filter(F.col("id") == run_id).head()
-        if row is None:
+        """The run row with its JSON fields parsed, params and tags by
+        key, artifacts by (created_at, id), metric keys sorted."""
+        found = self._rows("SELECT * FROM runs WHERE id = ?", [run_id])
+        if not found:
             return {}
-        run = row.asDict()
+        run = found[0]
         for field in ("env", "config"):
             run[field] = _loads_tolerant(run[field])
-
-        params = {
-            r.key: _loads_tolerant(r.value)
-            for r in self.store.df("params").filter(F.col("run_id") == run_id).collect()
-        }
-        tags = {
-            r.key: _loads_tolerant(r.value)
-            for r in self.store.df("tags").filter(F.col("run_id") == run_id).collect()
-        }
-        artifacts = [
-            r.asDict()
-            for r in self.store.df("artifacts")
-            .filter(F.col("run_id") == run_id)
-            .select("id", "name", "kind", "created_at", "uri", "sha256", "size_bytes")
-            .collect()
-        ]
-        metric_keys = [
-            r.key
-            for r in ops.distinct_values(
-                self.store.df("metrics").filter(F.col("run_id") == run_id), "key"
-            ).collect()
-        ]
         return {
             "run": run,
-            "params": params,
-            "tags": tags,
-            "artifacts": artifacts,
-            "metric_keys": metric_keys,
+            "params": self._key_values("params", run_id),
+            "tags": self._key_values("tags", run_id),
+            "artifacts": self._rows(
+                "SELECT id, name, kind, created_at, uri, sha256, size_bytes"
+                " FROM artifacts WHERE run_id = ? ORDER BY created_at, id",
+                [run_id],
+            ),
+            "metric_keys": self._keys(
+                "SELECT DISTINCT key FROM metrics WHERE run_id = ? ORDER BY key", [run_id]
+            ),
         }
+
+    def _keys(self, sql: str, params: Sequence = ()) -> list[str]:
+        return [r["key"] for r in self._rows(sql, params)]
+
+    def _key_values(self, table: str, run_id: str) -> dict[str, Any]:
+        sql = f"SELECT key, value FROM {table} WHERE run_id = ? ORDER BY key"
+        return {r["key"]: _loads_tolerant(r["value"]) for r in self._rows(sql, [run_id])}
 
     # --- get_metrics (P4 O3, incl. the cross-key LIMIT quirk) ------------
 
     def get_metrics(
         self, run_id: str, key: str | None = None, limit: int = 5000
     ) -> list[dict[str, Any]]:
-        m = self.store.df("metrics").filter(F.col("run_id") == run_id)
-        if key:
-            m = m.filter(F.col("key") == key).orderBy("step").limit(limit)
-        else:
-            # ref quirk preserved: the limit truncates ACROSS keys (:140-149)
-            m = m.orderBy("key", "step").limit(limit)
-        return [r.asDict() for r in m.select("key", "step", "ts", "value").collect()]
+        # ref quirk preserved: without a key the limit truncates ACROSS
+        # keys (:140-149)
+        by_key = " AND key = ?" if key else ""
+        return self._rows(
+            f"SELECT key, step, ts, value FROM metrics WHERE run_id = ?{by_key}"
+            " ORDER BY key, step LIMIT ?",
+            [run_id, *([key] if key else []), limit],
+        )
 
     def get_metrics_downsampled(
         self, run_id: str, key: str, points: int = 200
     ) -> list[dict[str, Any]]:
-        """Bounded-size chart series: bucket-mean downsample of one
-        (run, key) stream — the scalable replacement for get_metrics'
-        row-cap truncation (extension route; the reference would return
-        the first `limit` rows and silently drop the tail)."""
-        m = (
-            self.store.df("metrics")
-            .filter((F.col("run_id") == run_id) & (F.col("key") == key))
-            .withColumn("__x", F.col("step").cast("double"))
+        """Bounded-size chart series (extension route): the buckets of
+        `series_downsample` over one (run, key) stream's steps, where the
+        reference returns the first `limit` rows and drops the tail."""
+        return self._rows(
+            """
+            WITH m AS (SELECT CAST(step AS DOUBLE) AS x, value FROM metrics
+                       WHERE run_id = ? AND key = ?),
+                 ext AS (SELECT min(x) AS lo, max(x) AS hi FROM m)
+            SELECT CASE WHEN hi - lo <= 0 THEN 0 ELSE least(
+                       CAST(floor((x - lo) / (hi - lo) * ?) AS INTEGER), ?)
+                   END AS bucket,
+                   avg(x) AS step, avg(value) AS value, min(value) AS value_min,
+                   max(value) AS value_max, count(*) AS n
+            FROM m, ext GROUP BY bucket ORDER BY bucket""",
+            [run_id, key, points, points - 1],
         )
-        out = series_downsample(m, ["run_id"], "__x", "value", target_points=points)
-        return [
-            {
-                "bucket": r.bucket,
-                "step": r.x,
-                "value": r.y_mean,
-                "value_min": r.y_min,
-                "value_max": r.y_max,
-                "n": r.n_points,
-            }
-            for r in out.orderBy("bucket").collect()
-        ]
 
     # --- compare_runs (P5 A4 A5) -----------------------------------------
 
     def compare_runs(self, run_ids: list[str]) -> dict[str, Any]:
+        """Runs newest first (started_at DESC, id), params by key, and
+        each key's series ordered by (step, run_id)."""
         if not run_ids:
             return {"runs": [], "param_diff": {}, "metrics": {}}
-        runs = [
-            r.asDict()
-            for r in ops.in_list_filter(self.store.df("runs"), "id", run_ids)
-            .select(*_RUN_COLS)
-            .collect()
-        ]
-        all_params: dict[str, dict[str, Any]] = {}
-        for r in (
-            ops.in_list_filter(self.store.df("params"), "run_id", run_ids)
-            .orderBy("key")
-            .collect()
-        ):
-            all_params.setdefault(r.run_id, {})[r.key] = _loads_tolerant(r.value)
-
-        # ONE scan for every series, ordered (key, step); the reference
-        # issues one query per key (N+1, ref :190-198)
-        metrics: dict[str, list[dict[str, Any]]] = {}
-        series = (
-            ops.in_list_filter(self.store.df("metrics"), "run_id", run_ids)
-            .select("key", "run_id", "step", "value")
-            .orderBy("key", "step")
-            .collect()
+        ids = [list(run_ids)]
+        runs = self._rows(
+            f"SELECT {_RUN_COLS} FROM runs WHERE id IN {_IN_IDS} ORDER BY started_at DESC, id", ids
         )
-        for r in series:
-            metrics.setdefault(r.key, []).append(
-                {"run_id": r.run_id, "step": r.step, "value": r.value}
-            )
-        return {"runs": runs, "params": all_params, "metrics": metrics}
+        params: dict[str, dict[str, Any]] = {}
+        for r in self._rows(
+            f"SELECT run_id, key, value FROM params WHERE run_id IN {_IN_IDS}"
+            " ORDER BY key, run_id",
+            ids,
+        ):
+            params.setdefault(r["run_id"], {})[r["key"]] = _loads_tolerant(r["value"])
+        metrics: dict[str, list[dict[str, Any]]] = {}
+        for r in self._rows(
+            f"SELECT key, run_id, step, value FROM metrics WHERE run_id IN {_IN_IDS}"
+            " ORDER BY key, step, run_id",
+            ids,
+        ):
+            metrics.setdefault(r.pop("key"), []).append(r)
+        return {"runs": runs, "params": params, "metrics": metrics}
 
     # --- metric keys (A3 P6) ---------------------------------------------
 
     def metric_keys_global(self) -> list[str]:
-        return [
-            r.key
-            for r in ops.distinct_values(
-                self.store.df("metrics"), "key", exclude_prefix="system/"
-            ).collect()
-        ]
+        return self._keys(
+            "SELECT DISTINCT key FROM metrics WHERE NOT starts_with(key, 'system/') ORDER BY key"
+        )
 
     # --- metric_summary / leaderboard (A6: J1+J2+W1+O4) ------------------
 
     def metric_summary(self, key: str, limit: int = 20) -> list[dict[str, Any]]:
-        m = self.store.df("metrics").filter(F.col("key") == key)
-        last = ops.last_per_group(m, ["run_id"], "step", keep_ties=True)
-        runs = self.store.df("runs").select(
-            F.col("id").alias("run_id"), "name", "started_at"
+        """Each run's value of `key` at its last step (every row of a
+        tied last step), newest run first; ties order by value."""
+        return self._rows(
+            """
+            SELECT m.run_id, r.name, m.value
+            FROM metrics m JOIN runs r ON r.id = m.run_id
+            WHERE m.key = ?
+            QUALIFY rank() OVER (PARTITION BY m.run_id ORDER BY m.step DESC) = 1
+            ORDER BY r.started_at DESC, m.run_id, m.value LIMIT ?""",
+            [key, limit],
         )
-        out = (
-            # no broadcast hint: runs grows one row per tracked run with
-            # no cap — not bounded by construction (the repo rule); AQE
-            # still broadcasts it while it fits
-            last.join(runs, on="run_id")
-            .orderBy(F.col("started_at").desc(), "run_id")
-            .limit(limit)
-            .select("run_id", "name", "value")
-        )
-        return [r.asDict() for r in out.collect()]
 
     # --- delete (D6) ------------------------------------------------------
 

@@ -2,12 +2,14 @@
 (ref: waddle/_server.py:99-110 route table and response shapes).
 
 Framework-free core: `Routes` maps (method, path) → JSON-ready payloads by
-delegating to SparkDashboard — so any HTTP adapter can host it.  The
-bundled (and only) adapter is the stdlib ThreadingHTTPServer: an earlier
-import-gated Starlette twin was removed in round 7 because its
-dependencies aren't installable here, making it permanently untestable
-surface — wrapping `Routes` in any ASGI framework remains a
-straightforward exercise for deployments that want one.
+delegating to SparkDashboard, whose read routes are DuckDB SQL on the
+store's mirror, so every GET and POST /api/compare is served without a
+SparkSession or JVM (the Spark versions of those shapes are catalog
+queries).  Only DELETE /api/runs/{id} reaches Spark, through the store's
+Parquet rewrite.  Bad client input (a malformed number or JSON body)
+answers 400 and any other route failure 500, both as {"error": ...}.
+The bundled adapter is the stdlib ThreadingHTTPServer; `Routes` can be
+wrapped in any ASGI framework by deployments that want one.
 
 Live updates: the reference pushes per-insert WebSocket messages
 {"type":"metric",...} (ref :115-124).  The stdlib adapter speaks that
@@ -20,6 +22,7 @@ the identical JSON payloads.
 from __future__ import annotations
 
 import json
+import logging
 import queue
 import re
 import threading
@@ -29,6 +32,20 @@ from urllib.parse import parse_qs, urlparse
 from waddleml_spark.operators.dashboard import SparkDashboard
 from waddleml_spark.store import WaddleStore
 from waddleml_spark.streaming.live import LiveBus
+
+_log = logging.getLogger(__name__)
+
+
+class BadRequest(ValueError):
+    """Malformed client input (a query parameter or request body): the
+    HTTP adapter answers 400 with the message."""
+
+
+def _int(q, name: str, default: int, lo: int = 0) -> int:
+    raw = q.get(name, str(default))
+    if not re.fullmatch(r"\d+", raw) or int(raw) < lo:
+        raise BadRequest(f"{name} must be an integer >= {lo}, got {raw!r}")
+    return int(raw)
 
 
 class Routes:
@@ -45,8 +62,8 @@ class Routes:
             status=q.get("status"),
             sort=q.get("sort", "started_at"),
             order=q.get("order", "desc"),
-            limit=int(q.get("limit", "200")),
-            offset=int(q.get("offset", "0")),
+            limit=_int(q, "limit", 200),
+            offset=_int(q, "offset", 0),
         )
 
     # GET /api/runs/{run_id}  (404 when missing, ref :45-50)
@@ -56,19 +73,20 @@ class Routes:
 
     # GET /api/runs/{run_id}/metrics
     def get_metrics(self, run_id: str, q: dict) -> list:
-        return self.dash.get_metrics(
-            run_id, key=q.get("key"), limit=int(q.get("limit", "5000"))
-        )
+        return self.dash.get_metrics(run_id, key=q.get("key"), limit=_int(q, "limit", 5000))
 
     # GET /api/runs/{run_id}/metrics/downsampled  (extension route)
     def get_metrics_downsampled(self, run_id: str, q: dict) -> list:
         return self.dash.get_metrics_downsampled(
-            run_id, q.get("key", ""), points=int(q.get("points", "200"))
+            run_id, q.get("key", ""), points=_int(q, "points", 200, lo=1)
         )
 
     # POST /api/compare
-    def compare(self, body: dict) -> dict:
-        return self.dash.compare_runs(body.get("run_ids", []))
+    def compare(self, body) -> dict:
+        ids = body.get("run_ids", []) if isinstance(body, dict) else None
+        if not isinstance(ids, list) or not all(isinstance(i, str) for i in ids):
+            raise BadRequest('body must be {"run_ids": [string, ...]}')
+        return self.dash.compare_runs(ids)
 
     # DELETE /api/runs/{run_id}
     def delete_run(self, run_id: str) -> tuple[int, dict]:
@@ -81,7 +99,7 @@ class Routes:
 
     # GET /api/metric-summary
     def metric_summary(self, q: dict) -> list:
-        return self.dash.metric_summary(q.get("key", ""), limit=int(q.get("limit", "20")))
+        return self.dash.metric_summary(q.get("key", ""), limit=_int(q, "limit", 20))
 
 
 def _metric_messages(rows: list[dict]) -> list[dict]:
@@ -315,21 +333,20 @@ def make_http_server(
                         return self.wfile.write(body)
                 return self._json({"error": "not found"}, 404)
             if u.path == "/api/runs":
-                return self._json(routes.list_runs(q))
+                return self._api(routes.list_runs, q)
             m = re.fullmatch(r"/api/runs/([^/]+)/metrics/downsampled", u.path)
             if m:
-                return self._json(routes.get_metrics_downsampled(m.group(1), q))
+                return self._api(routes.get_metrics_downsampled, m.group(1), q)
             m = re.fullmatch(r"/api/runs/([^/]+)/metrics", u.path)
             if m:
-                return self._json(routes.get_metrics(m.group(1), q))
+                return self._api(routes.get_metrics, m.group(1), q)
             m = re.fullmatch(r"/api/runs/([^/]+)", u.path)
             if m:
-                status, data = routes.get_run(m.group(1))
-                return self._json(data, status)
+                return self._api(routes.get_run, m.group(1))
             if u.path == "/api/metric-keys":
-                return self._json(routes.metric_keys())
+                return self._api(routes.metric_keys)
             if u.path == "/api/metric-summary":
-                return self._json(routes.metric_summary(q))
+                return self._api(routes.metric_summary, q)
             if u.path == "/events":
                 return self._sse()
             if u.path == "/ws":
@@ -339,17 +356,34 @@ def make_http_server(
         def do_POST(self):
             u = urlparse(self.path)
             if u.path == "/api/compare":
-                n = int(self.headers.get("Content-Length", "0"))
-                body = json.loads(self.rfile.read(n) or b"{}")
-                return self._json(routes.compare(body))
+                return self._api(lambda: routes.compare(self._json_body()))
             self._json({"error": "not found"}, 404)
 
         def do_DELETE(self):
             m = re.fullmatch(r"/api/runs/([^/]+)", urlparse(self.path).path)
             if m:
-                status, data = routes.delete_run(m.group(1))
-                return self._json(data, status)
+                return self._api(routes.delete_run, m.group(1))
             self._json({"error": "not found"}, 404)
+
+        def _json_body(self):
+            n = _int(self.headers, "Content-Length", 0)
+            try:
+                return json.loads(self.rfile.read(n) or b"{}")
+            except ValueError as e:
+                raise BadRequest(f"invalid JSON body: {e}") from None
+
+        def _api(self, route, *args):
+            """Answer one API call: 400 for bad input, 500 with the error
+            for any other failure, so the client always gets a response."""
+            try:
+                result = route(*args)
+            except BadRequest as e:
+                return self._json({"error": str(e)}, 400)
+            except Exception as e:
+                _log.exception("%s %s failed", self.command, self.path)
+                return self._json({"error": f"{type(e).__name__}: {e}"}, 500)
+            status, payload = result if isinstance(result, tuple) else (200, result)
+            self._json(payload, status)
 
         def _ws(self):
             """True RFC 6455 WebSocket: the reference's wire protocol
